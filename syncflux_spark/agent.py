@@ -58,20 +58,10 @@ def replicate_data(
     the schema, chunk-sync every measurement of that RP over
     [start, end) into ``{dst_root}/{target_db}/{rp}/``. Each (db, rp)
     gets its own SyncReport (C5 accounting), recovery per C2."""
-    reports: list[SyncReport] = []
-    for db in schema:
-        for rp in db.rps.values():
-            ms = {
-                name: catalog.measurement_df(db.name, name, rp.name)
-                for name in rp.measurements
-            }
-            if not ms:
-                continue
-            dst = os.path.join(dst_root, db.target_name, rp.name)
-            rep = sync_dbrp(spark, ms, dst, start, end, chunk=chunk, **sync_kwargs)
-            rep.src = f"{db.name}.{rp.name}"
-            reports.append(rep)
-    return reports
+    return _replicate(
+        spark, catalog, schema, dst_root, lambda rp: (start, end), chunk,
+        sync_kwargs,
+    )
 
 
 def replicate_data_full(
@@ -90,10 +80,19 @@ def replicate_data_full(
     client.go:24-38)."""
     now = now or datetime.now(timezone.utc)
     maxret = parse_duration(max_retention)
+    return _replicate(
+        spark, catalog, schema, dst_root,
+        lambda rp: copy_window(rp.duration, maxret, now), chunk, sync_kwargs,
+    )
+
+
+def _replicate(
+    spark, catalog, schema, dst_root, window, chunk, sync_kwargs
+) -> list[SyncReport]:
+    """The DB × RP loop of C3/C4; ``window(rp)`` → (start, end)."""
     reports: list[SyncReport] = []
     for db in schema:
         for rp in db.rps.values():
-            start, end = copy_window(rp.duration, maxret, now)
             ms = {
                 name: catalog.measurement_df(db.name, name, rp.name)
                 for name in rp.measurements
@@ -101,6 +100,7 @@ def replicate_data_full(
             if not ms:
                 continue
             dst = os.path.join(dst_root, db.target_name, rp.name)
+            start, end = window(rp)
             rep = sync_dbrp(spark, ms, dst, start, end, chunk=chunk, **sync_kwargs)
             rep.src = f"{db.name}.{rp.name}"
             reports.append(rep)

@@ -290,10 +290,12 @@ def sync_dbrp(
     **kwargs,
 ) -> SyncReport:
     """C2 ``SyncDBRP`` (pkg/agent/sync.go:215-232): run C1; re-run each
-    bad chunk at ``chunk/recovery_divisor`` granularity (one level).
-    Because chunk outputs are window-keyed overwrites, the finer-grain
-    re-run of a bad window is idempotent over whatever the failed
-    attempt managed to write."""
+    bad chunk at ``chunk/recovery_divisor`` granularity (one level),
+    for the measurements that failed in it only. Siblings that landed
+    keep their output under the chunk's window key: re-copying them
+    under the finer keys would duplicate their rows. A failed
+    measurement's finer-grain re-run is idempotent over whatever its
+    failed attempt managed to write (window-keyed overwrites)."""
     chunk_td = parse_duration(chunk)
     report = sync(spark, measurements, dst_root, start, end, chunk=chunk_td, **kwargs)
     bad = report.bad_chunks
@@ -303,16 +305,17 @@ def sync_dbrp(
     # recovery pass: drop the fail_injector unless caller re-supplies it
     kwargs.pop("fail_injector", None)
     for c in bad:
-        sub = sync(spark, measurements, dst_root, c.start, c.end, chunk=fine, **kwargs)
-        # replace the bad chunk's accounting with the recovery outcome
-        # (do NOT also append sub.chunks — that would double-count points)
+        failed = {k: v for k, v in measurements.items() if k not in c.measurements}
+        sub = sync(spark, failed, dst_root, c.start, c.end, chunk=fine, **kwargs)
+        # the bad chunk's accounting = its landed siblings + the
+        # recovery outcome (sub.chunks are NOT appended — that would
+        # double-count points)
         c.read_errors = sub.read_errors
         c.write_errors = sub.write_errors
-        c.points = sub.points
-        c.measurements = {
-            k: sum(s.measurements.get(k, 0) for s in sub.chunks)
-            for k in set().union(*(s.measurements.keys() for s in sub.chunks))
-        }
+        c.points += sub.points
+        for s in sub.chunks:
+            for k, n in s.measurements.items():
+                c.measurements[k] = c.measurements.get(k, 0) + n
     return report
 
 

@@ -273,6 +273,8 @@ class LineProtocolSink:
         import os
         import re
 
+        from syncflux_spark.locking import table_lock
+
         if precision not in self.PRECISION_NS:
             raise ValueError(f"invalid precision {precision!r}")
         factor = self.PRECISION_NS[precision]
@@ -311,9 +313,15 @@ class LineProtocolSink:
                     f"measurement {meas!r} carry a value whose syntax "
                     f"does not match the declared field type"
                 )
-            parsed.drop("measurement", "_type_conflict").write.mode(
-                "append"
-            ).parquet(os.path.join(self.root, meas))
+            # one append at a time per measurement: concurrent Spark
+            # appends into one directory share its _temporary
+            # committer dir, and the first job commit deletes the
+            # other jobs' pending task output (acknowledged points lost)
+            dst = os.path.join(self.root, meas)
+            with table_lock(dst):
+                parsed.drop("measurement", "_type_conflict").write.mode(
+                    "append"
+                ).parquet(dst)
             total += len(ls)
         return total
 

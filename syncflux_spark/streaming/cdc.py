@@ -3,7 +3,8 @@ change batches continuously merged into a base parquet table.
 
 The batch operator (operators/cdc.py::apply_changes) gives MERGE
 semantics for one batch; this module wraps it in Structured
-Streaming's exactly-once machinery:
+Streaming's exactly-once machinery (the checkpointed driver of
+streaming/base.py, with the merge as its sink):
 
     readStream(changes dir) → foreachBatch(merge into base via
     staging-swap) with checkpointLocation
@@ -39,9 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from syncflux_spark.operators.cdc import apply_changes, compact_changes
+from syncflux_spark.streaming.base import CheckpointedFileStream
 
 
-class CdcMergeStream:
+class CdcMergeStream(CheckpointedFileStream):
     """Continuously merge change-batch parquet files into a base
     table directory with MERGE semantics and exactly-once effect."""
 
@@ -59,16 +61,6 @@ class CdcMergeStream:
         state_partitions: int | None = None,
         state_backend: str | None = None,
     ):
-        self.spark = spark
-        self.changes_path = changes_path
-        self.base_path = base_path
-        self.checkpoint_path = checkpoint_path
-        self.key_col = key_col
-        self.op_col = op_col
-        self.max_files_per_trigger = max_files_per_trigger
-        #: explicit change-sequence column (LSN/commit ts) if the feed
-        #: carries one; otherwise file order (mtime, path) sequences
-        self.seq_col = seq_col
         #: "dir" = plain-parquet directory with locked staging swap
         #: (single concurrent writer, enforced); "tx" = a
         #: txtable.TxTable commit log at base_path — OCC merges that
@@ -76,36 +68,37 @@ class CdcMergeStream:
         #: merger) without the advisory lock
         if base_format not in ("dir", "tx"):
             raise ValueError(f"base_format must be 'dir' or 'tx', got {base_format!r}")
+        # state_partitions sizes the per-batch compaction window +
+        # merge join (no streaming state here — CDC state is the base
+        # table itself)
+        super().__init__(
+            spark, changes_path, base_path, checkpoint_path,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
+        self.changes_path = changes_path
+        self.base_path = base_path
+        self.key_col = key_col
+        self.op_col = op_col
+        #: explicit change-sequence column (LSN/commit ts) if the feed
+        #: carries one; otherwise file order (mtime, path) sequences
+        self.seq_col = seq_col
         self.base_format = base_format
-        #: sizes the per-batch compaction window + merge join (no
-        #: streaming state here — CDC state is the base table itself);
-        #: see utils.streaming_state. None = session conf.
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
-        self.batches_applied = 0
 
-    # -- plumbing -----------------------------------------------------------
-    def _reader(self):
-        self.spark.conf.set(
-            "spark.sql.parquet.inferTimestampNTZ.enabled", "false"
-        )
-        schema = self.spark.read.parquet(self.changes_path).schema
-        reader = self.spark.readStream.schema(schema).option(
-            "latestFirst", "false"
-        )
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", self.max_files_per_trigger
-            )
+    def _transform(self, df: DataFrame) -> DataFrame:
         # carry the source file's (mtime, path) so a micro-batch that
         # folds several accumulated change files (availableNow with no
         # maxFilesPerTrigger) can be compacted to the LAST change per
         # key in file order before the merge
-        return reader.parquet(self.changes_path).select(
+        return df.select(
             "*",
             F.col("_metadata.file_modification_time").alias("_cdc_mtime"),
             F.col("_metadata.file_path").alias("_cdc_file"),
         )
+
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self._apply_batch(batch_df, batch_id)
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
@@ -138,7 +131,6 @@ class CdcMergeStream:
             TxTable(self.spark, self.base_path).merge_changes(
                 compacted, key_col=self.key_col, op_col=self.op_col
             )
-            self.batches_applied += 1
             return
         base = self.spark.read.parquet(self.base_path)
         merged = apply_changes(
@@ -157,35 +149,6 @@ class CdcMergeStream:
             os.rename(self.base_path, old)
             os.rename(staging, self.base_path)
             shutil.rmtree(old)
-        self.batches_applied += 1
-
-    # -- drive --------------------------------------------------------------
-    def run_available(self) -> int:
-        """Apply every change file currently present, then stop — the
-        deterministic 'catch up now' trigger."""
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                self._reader()
-                .writeStream.foreachBatch(self._apply_batch)
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return self.batches_applied
-
-    def start_continuous(self, processing_interval: str = "10 seconds"):
-        return (
-            self._reader()
-            .writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(processingTime=processing_interval)
-            .start()
-        )
 
     def read_base(self) -> DataFrame:
         if self.base_format == "tx":

@@ -21,9 +21,8 @@ upstream's maximum re-delivery lag, not to "forever".
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from syncflux_spark.functions.time import ns_to_us
 from syncflux_spark.streaming.replicate import ReplicationStream
 
 
@@ -47,16 +46,9 @@ class DedupReplicationStream(ReplicationStream):
         self.time_ns_col = time_ns_col
         self.horizon = horizon
 
-    def _reader(self):
-        df = super()._reader()
-        # ns parquet scans the time column as an epoch long
-        # (nanosAsLong); µs parquet as TimestampType directly.
-        if dict(df.dtypes).get(self.time_ns_col) == "bigint":
-            event_time = F.timestamp_micros(ns_to_us(self.time_ns_col))
-        else:
-            event_time = F.col(self.time_ns_col)
+    def _transform(self, df: DataFrame) -> DataFrame:
         return (
-            df.withColumn("__event_time", event_time)
+            df.withColumn("__event_time", self._event_time(df, self.time_ns_col))
             .withWatermark("__event_time", self.horizon)
             .dropDuplicatesWithinWatermark(list(self.key_cols))
             .drop("__event_time")

@@ -19,8 +19,8 @@ Mechanics (Structured Streaming stream-stream inner join):
 * State is sharded by the equality key (user_id): the same hash
   partitioning that scales the batch join scales the state store.
 
-The parquet sink's commit log makes replays idempotent, as everywhere
-else in streaming/.
+The parquet sink's commit log makes replays idempotent; driver and
+sink are streaming/base.py's ParquetSinkStream.
 """
 
 from __future__ import annotations
@@ -28,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from syncflux_spark.functions.time import unixnano_to_ts
+from syncflux_spark.streaming.base import ParquetSinkStream
 
 
-class ClickAttributionStream:
+class ClickAttributionStream(ParquetSinkStream):
     """Join a purchases stream to the same user's clicks in the
     trailing ``attribution_window``; emit (user_id, purchase_us,
     click_us) pairs in exact epoch-µs longs."""
@@ -56,10 +56,17 @@ class ClickAttributionStream:
             raise ValueError(
                 f"join_type must be inner or left_outer, got {join_type!r}"
             )
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
+        #: state_partitions: join state keeps FOUR stores per shard
+        #: (keyToNumValues/keyWithIndex × two sides), so this query
+        #: class over-shards hardest of all — measured 5× wall-clock
+        #: at 4 vs 32 shards on the sf0.1 outer join; with
+        #: state_backend='rocksdb' they move off the heap.
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
         self.attribution_window = attribution_window
         self.watermark_delay = watermark_delay
         self.time_col = time_col
@@ -72,42 +79,12 @@ class ClickAttributionStream:
         #: watermark passes their window, so a drained source needs a
         #: watermark-advancing flush batch (see emit_flush_sentinel).
         self.join_type = join_type
-        self.max_files_per_trigger = max_files_per_trigger
-        #: state-store shard count (join state keeps FOUR stores per
-        #: shard — keyToNumValues/keyWithIndex × two sides — so this
-        #: query class over-shards hardest of all). Pinned from
-        #: spark.sql.shuffle.partitions at the first batch, frozen in
-        #: the checkpoint; measured 5× wall-clock at 4 vs 32 shards on
-        #: the sf0.1 outer join. None = inherit the session conf.
-        self.state_partitions = state_partitions
-        #: state-store provider dial (utils.STATE_BACKENDS); the four
-        #: per-shard join stores are the first state to outgrow the
-        #: heap at scale — 'rocksdb' moves them to local disk.
-        self.state_backend = state_backend
 
     def _side(self, event_type: str, alias: str) -> DataFrame:
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # TIMESTAMP, not TIMESTAMP_NTZ: watermarks require the tz-aware type
-        self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        schema = self.spark.read.parquet(self.src_path).schema
-        # ns parquet scans the time column as an epoch long
-        # (nanosAsLong); µs parquet as TimestampType. None = detect.
-        is_ns = self.time_is_ns
-        if is_ns is None:
-            is_ns = schema[self.time_col].dataType.simpleString() == "bigint"
-        evt = (
-            unixnano_to_ts(self.time_col) if is_ns else F.col(self.time_col)
-        )
-        reader = self.spark.readStream.schema(schema).option(
-            "latestFirst", "false"
-        )
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(self.max_files_per_trigger)
-            )
+        df = self._reader()
+        evt = self._event_time(df, self.time_col, self.time_is_ns)
         return (
-            reader.parquet(self.src_path)
-            .where(F.col("event_type") == event_type)
+            df.where(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{alias}_user_id"),
                 evt.alias(f"{alias}_evt"),
@@ -115,7 +92,7 @@ class ClickAttributionStream:
             .withWatermark(f"{alias}_evt", self.watermark_delay)
         )
 
-    def _joined(self) -> DataFrame:
+    def _stream(self) -> DataFrame:
         p = self._side("purchase", "p")
         c = self._side("click", "c")
         cond = (
@@ -143,7 +120,7 @@ class ClickAttributionStream:
         import time as _time
         import uuid as _uuid
 
-        base = self.spark.read.parquet(self.src_path).limit(1)
+        base = self._batch_source().limit(1)
         is_ns = base.schema[self.time_col].dataType.simpleString() == "bigint"
         far = (
             F.lit(1_893_456_000_000_000_000)  # 2030-01-01 in ns
@@ -181,23 +158,6 @@ class ClickAttributionStream:
         )
         _shutil.rmtree(stage, ignore_errors=True)
         _time.sleep(0.01)
-
-    def run_available(self) -> None:
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                self._joined()
-                .writeStream.format("parquet")
-                .option("path", self.dst_path)
-                .option("checkpointLocation", self.checkpoint_path)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
     def read_pairs(self) -> DataFrame:
         return self.spark.read.parquet(self.dst_path)

@@ -47,7 +47,6 @@ rebuild is one groupBy if the store is lost.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -58,6 +57,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from syncflux_spark.operators.dedup import band_keys
+from syncflux_spark.streaming.base import CheckpointedFileStream
 
 BANDMIN_OUTPUT = T.StructType(
     [
@@ -194,12 +194,15 @@ def _bandmin_factory(id_col: str, emit_bands: bool = False):
     return _bandmin_fn
 
 
-class StreamingLshIndex:
+class StreamingLshIndex(CheckpointedFileStream):
     """Checkpointed incremental LSH band index over a document stream:
     per-bucket canonical-minimum state maintained across micro-batches
     and restarts, equal by construction to the batch-computed index.
-    Same availableNow / batch-keyed-sink / newest-batch-wins plumbing
-    as the other stateful operators in this package."""
+    Driver and newest-batch-wins read are the CheckpointedFileStream
+    base's; with ``persist_bands`` the sink also writes each batch's
+    raw band rows to ``bands_path``."""
+
+    output_mode = "update"
 
     def __init__(
         self,
@@ -219,10 +222,13 @@ class StreamingLshIndex:
     ):
         if n_shards is not None and n_shards < 1:
             raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            path_glob_filter=path_glob_filter,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
         self.id_col = id_col
         self.text_col = text_col
         # Python invocations per batch == shards touched; per-shard
@@ -239,10 +245,6 @@ class StreamingLshIndex:
         # loudly (ADVICE r10), so a grown corpus or different machine
         # can never silently orphan every bucket's state.
         self.n_shards = n_shards
-        self.path_glob_filter = path_glob_filter
-        self.max_files_per_trigger = max_files_per_trigger
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
         self.persist_bands = persist_bands
         self.bands_path = bands_path or f"{dst_path}_bands"
 
@@ -289,12 +291,7 @@ class StreamingLshIndex:
             return stored
         n = self.n_shards
         if n is None:
-            reader = self.spark.read
-            if self.path_glob_filter:
-                reader = reader.option(
-                    "pathGlobFilter", self.path_glob_filter
-                )
-            n_docs = reader.parquet(self.src_path).count()
+            n_docs = self._batch_source().count()
             n = shards_for_buckets(
                 self.spark.sparkContext.defaultParallelism, 2 * n_docs
             )
@@ -346,23 +343,11 @@ class StreamingLshIndex:
                 "probe. Pass persist_bands=True."
             )
 
-    def _reader(self):
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option(
-                "pathGlobFilter", self.path_glob_filter
-            )
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = self.spark.readStream.schema(schema)
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(self.max_files_per_trigger)
-            )
-        return reader.parquet(self.src_path)
-
-    def run_available(self) -> None:
+    def _stream(self) -> DataFrame:
+        # n_shards and the bands coverage are pinned in checkpoint
+        # markers before the stream starts
+        n_shards = self._resolve_n_shards()
+        self._resolve_bands_coverage()
         # band_keys is all narrow ops (shingle → md5 → array_min →
         # explode), so it composes onto the streaming reader unchanged
         # one file per trigger = ONE scan partition: without an
@@ -370,8 +355,6 @@ class StreamingLshIndex:
         # micro-batch (spread_for_cpu can't size a streaming plan —
         # no .rdd — so the operator spreads here, before the
         # CPU-heavy narrow stage)
-        n_shards = self._resolve_n_shards()
-        self._resolve_bands_coverage()
         docs = self._reader().repartition(
             self.spark.sparkContext.defaultParallelism
         )
@@ -386,7 +369,7 @@ class StreamingLshIndex:
         out_schema = (
             BANDMIN_OUTPUT_WITH_BANDS if self.persist_bands else BANDMIN_OUTPUT
         )
-        stream = bands.groupBy("_shard").applyInPandasWithState(
+        return bands.groupBy("_shard").applyInPandasWithState(
             _bandmin_factory(self.id_col, emit_bands=self.persist_bands),
             out_schema,
             BANDMIN_STATE,
@@ -394,74 +377,33 @@ class StreamingLshIndex:
             GroupStateTimeout.NoTimeout,
         )
 
-        persist_bands = self.persist_bands
-        dst_path, bands_path, id_col = (
-            self.dst_path,
-            self.bands_path,
-            self.id_col,
-        )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if not persist_bands:
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(dst_path, f"batch={batch_id}")
-                )
-                return
-            # two sinks from one micro-batch: persist first so the
-            # stateful plan (and its state updates) runs once, not
-            # once per sink
-            batch_df = batch_df.persist()
-            try:
+    def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        if not self.persist_bands:
+            return super()._write_batch(batch_df, batch_id)
+        # two sinks from one micro-batch: persist first so the
+        # stateful plan (and its state updates) runs once, not once
+        # per sink
+        batch_df = batch_df.persist()
+        try:
+            super()._write_batch(
                 batch_df.where(F.col("doc_id").isNull()).select(
                     "band_id", "band_key", "min_doc_id"
-                ).write.mode("overwrite").parquet(
-                    os.path.join(dst_path, f"batch={batch_id}")
-                )
-                batch_df.where(F.col("min_doc_id").isNull()).select(
-                    F.col("doc_id").alias(id_col), "band_id", "band_key"
-                ).write.mode("overwrite").parquet(
-                    os.path.join(bands_path, f"batch={batch_id}")
-                )
-            finally:
-                batch_df.unpersist()
-
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
+                ),
+                batch_id,
             )
-            q.awaitTermination()
+            super()._write_batch(
+                batch_df.where(F.col("min_doc_id").isNull()).select(
+                    F.col("doc_id").alias(self.id_col), "band_id", "band_key"
+                ),
+                batch_id,
+                self.bands_path,
+            )
+        finally:
+            batch_df.unpersist()
 
     def current_index(self) -> DataFrame:
         """The live index: newest emitted row per band bucket."""
-        from pyspark.sql import Window
-
-        out = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("basePath", self.dst_path)
-            .parquet(self.dst_path)
-        )
-        files = out.withColumn(
-            "_batch",
-            F.regexp_extract(F.input_file_name(), r"batch=(\d+)", 1).cast(
-                "long"
-            ),
-        )
-        w = Window.partitionBy("band_id", "band_key").orderBy(
-            F.desc("_batch")
-        )
-        return (
-            files.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("band_id", "band_key", "min_doc_id")
-        )
+        return self._latest_per_key(["band_id", "band_key"], ["min_doc_id"])
 
     def decisions(self, docs: DataFrame) -> DataFrame:
         """Per-document dedup decision against the live index:

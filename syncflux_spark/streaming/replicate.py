@@ -21,17 +21,18 @@ way ``data-chuck-duration`` bounds the reference's chunks. foreachBatch
 writes land in per-batch directories keyed by batch id, so a replayed
 batch overwrites its own output instead of duplicating it (the same
 idempotency design as operators/copy.py, and the parquet equivalent of
-Delta's txn log).
+Delta's txn log). The driver, source reader and batch-keyed sink are
+streaming/base.py's; this module adds the transactional sink.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from syncflux_spark.streaming.base import CheckpointedFileStream
 
-class ReplicationStream:
+
+class ReplicationStream(CheckpointedFileStream):
     """One measurement's continuous replication: source directory of
     parquet files → destination directory, exactly-once.
 
@@ -56,104 +57,30 @@ class ReplicationStream:
             raise ValueError(
                 f"table_format must be 'dir' or 'tx', got {table_format!r}"
             )
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
-        self.max_files_per_trigger = max_files_per_trigger
-        #: file streams require a DIRECTORY source; a glob filter
-        #: scopes the stream to one measurement's files within it
-        self.path_glob_filter = path_glob_filter
-        #: ``dir``: per-batch directories (below). ``tx``: batches are
-        #: batch-id-tagged TxTable commits — snapshot-isolated readers
-        #: and an O(1)-per-commit checkpointed log, the shape a
-        #: long-lived 5-min-cadence replicator needs (~100k
-        #: commits/year; see txtable.py module docstring).
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            path_glob_filter=path_glob_filter,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
+        #: ``dir``: per-batch directories (the base sink). ``tx``:
+        #: batches are batch-id-tagged TxTable commits — snapshot-
+        #: isolated readers and an O(1)-per-commit checkpointed log,
+        #: the shape a long-lived 5-min-cadence replicator needs
+        #: (~100k commits/year; see txtable.py module docstring).
         self.table_format = table_format
-        #: state-store shard count for stateful subclasses (the dedup
-        #: stream's dropDuplicatesWithinWatermark keeps per-key state;
-        #: plain replication has none, where this only sizes per-batch
-        #: shuffles). See utils.shuffle_partitions for the pin/restore
-        #: semantics and measurements. None = session conf.
-        self.state_partitions = state_partitions
-        #: state-store provider dial for stateful subclasses
-        #: (utils.STATE_BACKENDS); None = session conf.
-        self.state_backend = state_backend
-        self.batches_written = 0
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Idempotent sink: batch ``n`` always lands in ``batch=n/``
-        (dir format) or replaces the ``batch=n``-tagged groups of the
-        destination TxTable (tx format), so checkpoint replay after a
-        crash between 'sink write' and 'offset commit' cannot
-        double-write."""
-        if self.table_format == "tx":
-            from syncflux_spark.txtable import TxTable
+        """tx format: replace the ``batch=n``-tagged groups of the
+        destination TxTable, so a replayed batch cannot double-write."""
+        if self.table_format != "tx":
+            return super()._write_batch(batch_df, batch_id)
+        from syncflux_spark.txtable import TxTable
 
-            TxTable.ensure(self.spark, self.dst_path).replace_tagged(
-                "batch", str(batch_id), batch_df,
-                stats_cols=[c for c in ("ts_ns",) if c in batch_df.columns],
-            )
-        else:
-            (
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(self.dst_path, f"batch={batch_id}")
-                )
-            )
-        self.batches_written += 1
-
-    def _reader(self):
-        # file streams need an explicit schema: take it from the
-        # source's current files (schema evolution would re-resolve on
-        # restart, which is the behavior the reference gets from
-        # re-running GetSchema after recovery, hacluster.go:331)
-        # TIMESTAMP, not TIMESTAMP_NTZ: downstream watermarks (dedup
-        # subclass) require the tz-aware type; session tz is UTC
-        self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option("pathGlobFilter", self.path_glob_filter)
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = (
-            self.spark.readStream.schema(schema)
-            .option("latestFirst", "false")
-        )
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.parquet(self.src_path)
-
-    def run_available(self) -> int:
-        """Process everything currently available, then stop (the
-        deterministic 'catch up now' trigger — used for backfill after
-        an outage and in tests). Returns batches written this run."""
-        before = self.batches_written
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                self._reader()
-                .writeStream.foreachBatch(self._write_batch)
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        return self.batches_written - before
-
-    def start_continuous(self, processing_interval: str = "10 seconds"):
-        """Continuous mode: micro-batch every ``processing_interval``
-        (the reference's check-interval cadence,
-        conf/sample.syncflux.toml:60). Returns the StreamingQuery."""
-        return (
-            self._reader()
-            .writeStream.foreachBatch(self._write_batch)
-            .option("checkpointLocation", self.checkpoint_path)
-            .trigger(processingTime=processing_interval)
-            .start()
+        TxTable.ensure(self.spark, self.dst_path).replace_tagged(
+            "batch", str(batch_id), batch_df,
+            stats_cols=[c for c in ("ts_ns",) if c in batch_df.columns],
         )
 
     def read_replica(self) -> DataFrame:
@@ -163,6 +90,4 @@ class ReplicationStream:
             from syncflux_spark.txtable import TxTable
 
             return TxTable(self.spark, self.dst_path).snapshot()
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self.dst_path
-        )
+        return self._read_batches()

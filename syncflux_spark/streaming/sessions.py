@@ -54,7 +54,6 @@ package (`utils.streaming_state`, measured in SCALE.md).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -63,6 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from syncflux_spark.streaming.base import CheckpointedFileStream
 
 #: key-typed schemas are built per-run from the source schema (the key
 #: column keeps its input type — long, string, …); these module-level
@@ -175,16 +176,16 @@ def _session_facts_fn_factory(gap_us: int, key_name: str):
     return _fn
 
 
-class StreamingSessionCloser:
+class StreamingSessionCloser(CheckpointedFileStream):
     """Exactly-once gap-session emission over a keyed event stream:
     append-only closed sessions, watermark-proven final. With
     ``numbering=True`` (default) the output equals the batch
     gaps-and-islands numbering; with ``numbering=False`` sessions are
     facts keyed by (key, start_us) and drained keys are dropped from
     the store (see module docstring for the state-size contract).
-    Same availableNow / batch-keyed-sink plumbing as the other
-    stateful operators; the sink union-reads (closed sessions are
-    append-only facts, no newest-wins resolution needed)."""
+    Driver and batch-keyed sink are the CheckpointedFileStream base's;
+    the sink union-reads (closed sessions are append-only facts, no
+    newest-wins resolution needed)."""
 
     def __init__(
         self,
@@ -202,28 +203,19 @@ class StreamingSessionCloser:
         state_backend: str | None = None,
         numbering: bool = True,
     ):
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            path_glob_filter=path_glob_filter,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
         self.key_col = key_col
         self.time_col = time_col
         self.gap_us = gap_us
         self.watermark_delay = watermark_delay
-        self.path_glob_filter = path_glob_filter
-        self.max_files_per_trigger = max_files_per_trigger
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
         self.numbering = numbering
         self._key_type: T.DataType | None = None
-
-    def _source_schema(self) -> T.StructType:
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option(
-                "pathGlobFilter", self.path_glob_filter
-            )
-        return batch_reader.parquet(self.src_path).schema
 
     def _validated_key_type(self, schema: T.StructType) -> T.DataType:
         """Fail fast with a clear message instead of the opaque
@@ -255,18 +247,6 @@ class StreamingSessionCloser:
             )
         return kt
 
-    def _reader(self):
-        schema = self._source_schema()
-        self._key_type = self._validated_key_type(schema)
-        reader = self.spark.readStream.schema(schema)
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(self.max_files_per_trigger)
-            )
-        return reader.parquet(self.src_path)
-
     def _schemas(self) -> tuple[T.StructType, T.StructType]:
         """(output, state) schemas with the key field typed from the
         source — a string-keyed stream emits a string key column."""
@@ -283,15 +263,12 @@ class StreamingSessionCloser:
             return out, SESSION_STATE
         return T.StructType([key_field, *tail]), SESSION_STATE_FACTS
 
-    def run_available(self) -> None:
-        ev = (
-            self._reader()
-            .withWatermark(self.time_col, self.watermark_delay)
-            .select(
-                F.col(self.key_col),
-                F.col(self.time_col),
-                F.unix_micros(self.time_col).alias("us"),
-            )
+    def _transform(self, df: DataFrame) -> DataFrame:
+        self._key_type = self._validated_key_type(df.schema)
+        ev = df.withWatermark(self.time_col, self.watermark_delay).select(
+            F.col(self.key_col),
+            F.col(self.time_col),
+            F.unix_micros(self.time_col).alias("us"),
         )
         out_schema, state_schema = self._schemas()
         fn = (
@@ -299,32 +276,13 @@ class StreamingSessionCloser:
             if self.numbering
             else _session_facts_fn_factory(self.gap_us, self.key_col)
         )
-        stream = ev.groupBy(self.key_col).applyInPandasWithState(
+        return ev.groupBy(self.key_col).applyInPandasWithState(
             fn,
             out_schema,
             state_schema,
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(self.dst_path, f"batch={batch_id}")
-            )
-
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .outputMode("append")
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
     def closed_sessions(self) -> DataFrame:
         """All sessions closed so far (append-only union; per-batch
@@ -334,9 +292,4 @@ class StreamingSessionCloser:
             if self.numbering
             else [self.key_col, "start_us", "end_us", "n_events"]
         )
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("basePath", self.dst_path)
-            .parquet(self.dst_path)
-            .select(*cols)
-        )
+        return self._read_batches().select(*cols)

@@ -10,14 +10,13 @@ live data.
 
 Design: state is a single struct row per key; each micro-batch folds
 its rows into the state and emits the UPDATED running summary for
-keys seen in that batch (update semantics — the sink dedups by key,
-here via batch-keyed overwrite directories like
-streaming/replicate.py). Arrow moves batches, no row-at-a-time Python.
+keys seen in that batch (update semantics: the batch-keyed sink and
+the newest-batch-wins read are streaming/base.py's). Arrow moves
+batches, no row-at-a-time Python.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -25,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from syncflux_spark.streaming.base import CheckpointedFileStream
 
 #: running per-series totals: the stateful analog of ts_series_stats
 TOTALS_OUTPUT = T.StructType(
@@ -75,7 +76,7 @@ def _totals_fn(
     )
 
 
-class StatefulUserTotals:
+class StatefulUserTotals(CheckpointedFileStream):
     """Checkpointed running per-user totals over an event stream.
 
     Each ``run_available()`` processes the files that appeared since
@@ -84,6 +85,8 @@ class StatefulUserTotals:
     aggregation, the applyInPandasWithState replacement for the
     reference's in-memory supervisor counters (hacluster.go:46-56).
     """
+
+    output_mode = "update"
 
     def __init__(
         self,
@@ -95,84 +98,24 @@ class StatefulUserTotals:
         state_partitions: int | None = None,
         state_backend: str | None = None,
     ):
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
-        self.path_glob_filter = path_glob_filter
-        # see utils.streaming_state: shard count + provider pinned at
-        # first batch, per-batch cost is per-shard; None = session conf
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
-
-    def _reader(self):
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option(
-                "pathGlobFilter", self.path_glob_filter
-            )
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = self.spark.readStream.schema(schema)
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        return reader.parquet(self.src_path)
-
-    def run_available(self) -> None:
-        """One availableNow pass: fold new files into per-key state,
-        write each batch's updated summaries to a batch-keyed dir
-        (idempotent under checkpoint replay)."""
-        stream = (
-            self._reader()
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _totals_fn,
-                TOTALS_OUTPUT,
-                TOTALS_STATE,
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            path_glob_filter=path_glob_filter,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
         )
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(self.dst_path, f"batch={batch_id}")
-            )
-
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    def _transform(self, df: DataFrame) -> DataFrame:
+        return df.groupBy("user_id").applyInPandasWithState(
+            _totals_fn, TOTALS_OUTPUT, TOTALS_STATE, "update",
+            GroupStateTimeout.NoTimeout,
+        )
 
     def current_totals(self) -> DataFrame:
         """Latest summary per user across all emitted batches (update
         sink semantics: newest batch wins per key)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        out = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("basePath", self.dst_path)
-            .parquet(self.dst_path)
-        )
-        # batch id from the directory name (partition column)
-        files = out.withColumn(
-            "_batch",
-            F.regexp_extract(F.input_file_name(), r"batch=(\d+)", 1).cast("long"),
-        )
-        w = Window.partitionBy("user_id").orderBy(F.desc("_batch"))
-        return (
-            files.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("user_id", "n_events", "sum_value_micro", "last_ts_us")
+        return self._latest_per_key(
+            ["user_id"], ["n_events", "sum_value_micro", "last_ts_us"]
         )
 
 
@@ -226,103 +169,26 @@ def _kmv_fn(
     )
 
 
-class StreamingKmvSketch:
+class StreamingKmvSketch(CheckpointedFileStream):
     """Checkpointed streaming distinct-count sketch per event type:
     the unbounded-cardinality companion to StatefulUserTotals — state
     is O(k) per key no matter how many distinct users flow through,
     the property that makes the sketch the RIGHT streaming answer at
-    100 TB (exact streaming distinct needs unbounded state). Same
-    availableNow / batch-keyed-sink / newest-batch-wins plumbing as
-    the totals operator."""
+    100 TB (exact streaming distinct needs unbounded state). Driver,
+    batch-keyed sink and newest-batch-wins read are the
+    CheckpointedFileStream base's."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        src_path: str,
-        dst_path: str,
-        checkpoint_path: str,
-        path_glob_filter: str | None = None,
-        max_files_per_trigger: int | None = None,
-        state_partitions: int | None = None,
-        state_backend: str | None = None,
-    ):
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
-        self.path_glob_filter = path_glob_filter
-        self.max_files_per_trigger = max_files_per_trigger
-        # see utils.streaming_state: shard count + provider pinned at
-        # first batch, per-batch cost is per-shard; None = session conf
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
+    output_mode = "update"
 
-    def _reader(self):
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option(
-                "pathGlobFilter", self.path_glob_filter
-            )
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = self.spark.readStream.schema(schema)
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(self.max_files_per_trigger)
-            )
-        return reader.parquet(self.src_path)
-
-    def run_available(self) -> None:
-        stream = (
-            self._reader()
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _kmv_fn,
-                KMV_OUTPUT,
-                KMV_STATE,
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
+    def _transform(self, df: DataFrame) -> DataFrame:
+        return df.groupBy("event_type").applyInPandasWithState(
+            _kmv_fn, KMV_OUTPUT, KMV_STATE, "update",
+            GroupStateTimeout.NoTimeout,
         )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(self.dst_path, f"batch={batch_id}")
-            )
-
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
     def current_sketches(self) -> DataFrame:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        out = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("basePath", self.dst_path)
-            .parquet(self.dst_path)
-        )
-        files = out.withColumn(
-            "_batch",
-            F.regexp_extract(F.input_file_name(), r"batch=(\d+)", 1).cast("long"),
-        )
-        w = Window.partitionBy("event_type").orderBy(F.desc("_batch"))
-        return (
-            files.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("event_type", "n_sample", "kth_hash", "est_distinct")
+        return self._latest_per_key(
+            ["event_type"], ["n_sample", "kth_hash", "est_distinct"]
         )
 
 
@@ -389,101 +255,23 @@ def _qsk_fn(
     )
 
 
-class StreamingQuantileSketch:
+class StreamingQuantileSketch(CheckpointedFileStream):
     """Checkpointed streaming percentile monitor per event type: the
     quantile companion to StreamingKmvSketch — O(k) state per key no
     matter how many rows flow through, and because the bottom-k
     priority sample is a mergeable, duplicate-insensitive summary,
     the streamed p50/p90/p99 equal the batch sketch's exactly (the
-    oracle checks the estimates themselves, not just plumbing). Same
-    availableNow / batch-keyed-sink / newest-batch-wins discipline."""
+    oracle checks the estimates themselves, not just plumbing).
+    Driver, batch-keyed sink and newest-batch-wins read are the
+    CheckpointedFileStream base's."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        src_path: str,
-        dst_path: str,
-        checkpoint_path: str,
-        path_glob_filter: str | None = None,
-        max_files_per_trigger: int | None = None,
-        state_partitions: int | None = None,
-        state_backend: str | None = None,
-    ):
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
-        self.path_glob_filter = path_glob_filter
-        self.max_files_per_trigger = max_files_per_trigger
-        # see utils.streaming_state: shard count + provider pinned at
-        # first batch, per-batch cost is per-shard; None = session conf
-        self.state_partitions = state_partitions
-        self.state_backend = state_backend
+    output_mode = "update"
 
-    def _reader(self):
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option(
-                "pathGlobFilter", self.path_glob_filter
-            )
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = self.spark.readStream.schema(schema)
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(self.max_files_per_trigger)
-            )
-        return reader.parquet(self.src_path)
-
-    def run_available(self) -> None:
-        stream = (
-            self._reader()
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _qsk_fn,
-                QSK_OUTPUT,
-                QSK_STATE,
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
+    def _transform(self, df: DataFrame) -> DataFrame:
+        return df.groupBy("event_type").applyInPandasWithState(
+            _qsk_fn, QSK_OUTPUT, QSK_STATE, "update",
+            GroupStateTimeout.NoTimeout,
         )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(self.dst_path, f"batch={batch_id}")
-            )
-
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                stream.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", self.checkpoint_path)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
     def current_sketches(self) -> DataFrame:
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        out = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .option("basePath", self.dst_path)
-            .parquet(self.dst_path)
-        )
-        files = out.withColumn(
-            "_batch",
-            F.regexp_extract(F.input_file_name(), r"batch=(\d+)", 1).cast("long"),
-        )
-        w = Window.partitionBy("event_type").orderBy(F.desc("_batch"))
-        return (
-            files.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("event_type", "n_sample", "p50", "p90", "p99")
-        )
+        return self._latest_per_key(["event_type"], ["n_sample", "p50", "p90", "p99"])

@@ -18,7 +18,8 @@ by the watermark horizon — late data can only reopen windows inside
 the delay, so state never grows with stream length. The parquet sink's
 ``_spark_metadata`` commit log makes replays idempotent (only
 committed files are visible to readers), the same idempotency design
-as operators/copy.py.
+as operators/copy.py; driver and sink are streaming/base.py's
+ParquetSinkStream.
 """
 
 from __future__ import annotations
@@ -26,10 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from syncflux_spark.functions.time import unixnano_to_ts
+from syncflux_spark.streaming.base import ParquetSinkStream
 
 
-class WindowedRollupStream:
+class WindowedRollupStream(ParquetSinkStream):
     """Continuous hourly rollup of an events-shaped file stream:
     tumbling ``window_duration`` windows per ``group_cols``, counting
     rows and summing ``value_col`` in integer micro-units (exact, so
@@ -37,6 +38,8 @@ class WindowedRollupStream:
 
     Output schema: ``bucket_s`` (window-start epoch seconds, long),
     ``*group_cols``, ``n_rows`` (long), ``sum_value_micro`` (long).
+    Append mode: only windows the watermark has passed are emitted;
+    a ``run_available()`` after new data arrives flushes more.
     """
 
     def __init__(
@@ -57,10 +60,13 @@ class WindowedRollupStream:
         state_partitions: int | None = None,
         state_backend: str | None = None,
     ):
-        self.spark = spark
-        self.src_path = src_path
-        self.dst_path = dst_path
-        self.checkpoint_path = checkpoint_path
+        super().__init__(
+            spark, src_path, dst_path, checkpoint_path,
+            path_glob_filter=path_glob_filter,
+            max_files_per_trigger=max_files_per_trigger,
+            state_partitions=state_partitions,
+            state_backend=state_backend,
+        )
         self.window_duration = window_duration
         self.watermark_delay = watermark_delay
         self.group_cols = tuple(group_cols)
@@ -72,45 +78,9 @@ class WindowedRollupStream:
         #: from the scanned dtype (sources/parquet.py is the batch
         #: twin of this handling).
         self.time_is_ns = time_is_ns
-        self.path_glob_filter = path_glob_filter
-        self.max_files_per_trigger = max_files_per_trigger
-        #: state-store shard count, pinned from
-        #: spark.sql.shuffle.partitions at the stream's FIRST batch
-        #: and frozen into the checkpoint; per-batch cost is one task
-        #: + one store commit per shard, so size it to the keyed-state
-        #: volume (utils.shuffle_partitions has the measurements).
-        #: None = inherit the session conf unchanged.
-        self.state_partitions = state_partitions
-        #: state-store provider: None = session conf, 'hdfs' = in-heap
-        #: maps, 'rocksdb' = off-heap local-disk (the 100 TB backend);
-        #: pinned into the checkpoint like the shard count
-        #: (utils.STATE_BACKENDS).
-        self.state_backend = state_backend
-
-    def _reader(self) -> DataFrame:
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # TIMESTAMP, not TIMESTAMP_NTZ: watermarks require the
-        # tz-aware type (and the session tz is UTC everywhere here)
-        self.spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        batch_reader = self.spark.read
-        if self.path_glob_filter:
-            batch_reader = batch_reader.option("pathGlobFilter", self.path_glob_filter)
-        schema = batch_reader.parquet(self.src_path).schema
-        reader = self.spark.readStream.schema(schema).option("latestFirst", "false")
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.parquet(self.src_path)
-
-    def _event_time(self, df: DataFrame):
-        is_ns = self.time_is_ns
-        if is_ns is None:
-            is_ns = dict(df.dtypes).get(self.time_col) == "bigint"
-        return unixnano_to_ts(self.time_col) if is_ns else F.col(self.time_col)
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        evt = self._event_time(df)
+        evt = self._event_time(df, self.time_col, self.time_is_ns)
         win = F.window("_evt", self.window_duration)
         return (
             df.withColumn("_evt", evt)
@@ -129,26 +99,6 @@ class WindowedRollupStream:
                 "sum_value_micro",
             )
         )
-
-    def run_available(self) -> None:
-        """Process everything currently in the source, then stop.
-        Append mode: only windows the watermark has passed are
-        emitted; re-run after new data arrives to flush more."""
-        from syncflux_spark.utils import streaming_state
-
-        with streaming_state(
-            self.spark, self.state_partitions, self.state_backend
-        ):
-            q = (
-                self._transform(self._reader())
-                .writeStream.format("parquet")
-                .option("path", self.dst_path)
-                .option("checkpointLocation", self.checkpoint_path)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
     def read_rollup(self) -> DataFrame:
         """Windows emitted so far (the parquet sink's commit log hides
@@ -180,7 +130,7 @@ class SessionWindowStream(WindowedRollupStream):
         self.session_gap = f"{session_gap_us // 1_000_000} seconds"
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        evt = self._event_time(df)
+        evt = self._event_time(df, self.time_col, self.time_is_ns)
         return (
             df.withColumn("_evt", evt)
             .withWatermark("_evt", self.watermark_delay)

@@ -241,12 +241,19 @@ def checkpoint_has_commits(spark: SparkSession, checkpoint_path: str) -> bool:
     """True when a streaming checkpoint has at least one COMMITTED
     batch — the "this checkpoint has history" predicate sink-coverage
     markers need (a marker may only claim from-batch-0 coverage on a
-    checkpoint with no prior commits). Resolved on the checkpoint's
-    filesystem like the markers."""
+    checkpoint with no prior commits)."""
+    return checkpoint_last_commit(spark, checkpoint_path) >= 0
+
+
+def checkpoint_last_commit(spark: SparkSession, checkpoint_path: str) -> int:
+    """Id of a streaming checkpoint's newest COMMITTED batch, -1 when
+    it has none. Resolved on the checkpoint's filesystem like the
+    markers."""
     fs, jpath = _hadoop_fs(spark, checkpoint_path.rstrip("/") + "/commits")
     if not fs.exists(jpath):
-        return False
-    return len(fs.listStatus(jpath)) > 0
+        return -1
+    names = (st.getPath().getName() for st in fs.listStatus(jpath))
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def eager_persist(df: DataFrame) -> DataFrame:

@@ -34,6 +34,7 @@ import threading
 import urllib.parse
 from dataclasses import asdict
 from datetime import datetime
+from decimal import Decimal
 from enum import Enum
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -45,6 +46,10 @@ def _jsonable(obj):
         return obj.value
     if isinstance(obj, datetime):
         return obj.isoformat()
+    if isinstance(obj, Decimal):
+        # decimal(20,0) carries InfluxDB unsigned fields: an exact
+        # JSON integer, as InfluxDB answers them
+        return int(obj) if obj == obj.to_integral_value() else float(obj)
     raise TypeError(type(obj))
 
 
@@ -399,7 +404,7 @@ class StatusServer:
                 self.end_headers()
 
                 def emit(doc):
-                    data = (json.dumps(doc) + "\n").encode()
+                    data = (json.dumps(doc, default=_jsonable) + "\n").encode()
                     self.wfile.write(f"{len(data):X}\r\n".encode())
                     self.wfile.write(data)
                     self.wfile.write(b"\r\n")

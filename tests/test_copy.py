@@ -101,6 +101,45 @@ class TestSync:
         assert back.count() == expected
         assert back.select("event_id").distinct().count() == expected
 
+    def test_recovery_reruns_only_failed_measurements(
+        self, spark, events, tmp_path
+    ):
+        """One of two measurements fails in the first chunk: recovery
+        re-copies only that one at chunk/10, so the sibling that
+        already landed under the chunk's window key is not copied a
+        second time under the finer keys."""
+        failed = []
+
+        def fail_a_once(name, s, e):
+            if name == "a" and not failed:
+                failed.append((s, e))
+                raise RuntimeError("injected outage")
+
+        rep = sync_dbrp(
+            spark,
+            {"a": events, "b": events},
+            str(tmp_path),
+            dt(2024, 1, 1),
+            dt(2024, 1, 31),
+            chunk="360h",
+            rw_max_retries=1,
+            fail_injector=fail_a_once,
+        )
+        assert rep.write_errors == 0
+        expected = events.where(
+            (events.ts >= "2024-01-01") & (events.ts < "2024-01-31")
+        ).count()
+        for name in ("a", "b"):
+            back = read_copied(spark, str(tmp_path), name)
+            assert back.count() == expected, name
+            assert back.select("event_id").distinct().count() == expected
+        # the bad chunk's report keeps the sibling's count and adds
+        # the recovered measurement's
+        (bad,) = [c for c in rep.chunks if (c.start, c.end) == failed[0]]
+        assert bad.measurements["a"] == bad.measurements["b"]
+        assert bad.points == 2 * bad.measurements["b"]
+        assert rep.points == 2 * expected
+
 
 def test_scan_time_range_non_ns_table(spark, sf_dir):
     """Fallback path: tables whose timestamps parquet stores at µs/ms

@@ -250,6 +250,17 @@ class TestWindowedRollup:
         # exactly-once: one row per emitted window
         assert ws3.read_rollup().count() == len(got)
 
+    def test_run_available_counts_committed_batches(self, spark, tmp_path):
+        """The parquet file sink makes no per-batch callback: the count
+        comes from the checkpoint's commit log."""
+        src = str(tmp_path / "src")
+        dst = str(tmp_path / "dst")
+        ckpt = str(tmp_path / "ckpt")
+        self._write(spark, src, [(10, "a", 1.5)])
+        assert WindowedRollupStream(spark, src, dst, ckpt).run_available() >= 1
+        # restart with no new files: nothing to apply
+        assert WindowedRollupStream(spark, src, dst, ckpt).run_available() == 0
+
 
 class TestStreamingKmvSketch:
     def test_sketch_state_survives_restart_and_dups(self, spark, tmp_path):

@@ -262,6 +262,27 @@ class TestWriteEndpoint:
         self._write(port, "cpu,host=h1,dc=eu usage=2.0 2000000000")
         assert sink.read_measurement("cpu").count() == 2
 
+    def test_concurrent_writes_keep_acknowledged_points(self, wserver):
+        """Concurrent /write requests into one measurement: every
+        acknowledged point is readable afterwards (two appends must
+        never share one output-committer directory)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        port, sink = wserver
+
+        def write(i):
+            body = "\n".join(
+                f"cpu,host=h{i},dc=eu usage={j}.0 {i * 1000 + j + 1}"
+                for j in range(50)
+            )
+            code, headers = self._write(port, body)
+            return int(headers["X-Points-Written"]) if code == 204 else 0
+
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            acked = sum(pool.map(write, range(12)))
+        assert acked > 0
+        assert sink.read_measurement("cpu").count() == acked
+
     def test_unknown_measurement_400(self, wserver):
         port, _ = wserver
         code, _ = self._write(port, "mem,host=h1 used=1.0 1000000000")
@@ -664,3 +685,44 @@ class TestPing:
             assert r.status == 204
             assert "syncflux" in r.headers["X-Influxdb-Version"]
             conn.close()
+
+
+class TestUnsignedFields:
+    """InfluxDB unsigned fields arrive as decimal(20,0) columns; /query
+    answers them as exact JSON integers, chunked or not."""
+
+    @pytest.fixture()
+    def userver(self, spark):
+        from syncflux_spark.influxql import InfluxQLEngine
+
+        monitor = HAMonitor(master_probe=lambda: True, slave_probe=lambda: True)
+        monitor.check_once()
+        df = spark.sql(
+            "SELECT 'h1' AS host, CAST(1700000000000000000 AS BIGINT) AS ts_ns, "
+            "CAST('18446744073709551615' AS DECIMAL(20,0)) AS f_uint "
+            "UNION ALL SELECT 'h2', CAST(1700000001000000000 AS BIGINT), "
+            "CAST(7 AS DECIMAL(20,0))"
+        )
+        eng = InfluxQLEngine(spark, tables={"m": df}, tags={"m": ["host"]})
+        srv = StatusServer(monitor, port=0, query_engine=eng)
+        port = srv.start()
+        yield port
+        srv.stop()
+
+    @staticmethod
+    def _uints(docs):
+        out = []
+        for d in docs:
+            for s in d["results"][0]["series"]:
+                i = s["columns"].index("f_uint")
+                out += [v[i] for v in s["values"]]
+        return sorted(out)
+
+    @pytest.mark.parametrize("chunked", [False, True])
+    def test_select_star_over_unsigned(self, userver, chunked):
+        q = urllib.parse.quote("SELECT * FROM m")
+        suffix = "&chunked=true" if chunked else ""
+        code, body, _ = _get(userver, f"/query?q={q}{suffix}")
+        assert code == 200
+        docs = [json.loads(ln) for ln in body.splitlines() if ln]
+        assert self._uints(docs) == [7, 18446744073709551615]
